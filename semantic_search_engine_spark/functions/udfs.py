@@ -43,7 +43,7 @@ def make_extract_features_udf(prefer_provided: bool = True,
     that later lose the per-url dedup tokenize wastefully — recrawl
     duplicates, a small corpus fraction.
 
-    Resolution policy: trust a non-NULL ``text`` column when the config
+    Resolution policy: trust a non-NULL string ``text`` when the config
     says so, else extract from ``html`` (FIXTURES.md §1: 90% of rows need
     extraction). Rows with neither yield NULL text and are dropped by the
     validity filter (``data_ingestion.py:100-103`` analogue).
@@ -69,6 +69,9 @@ def make_extract_features_udf(prefer_provided: bool = True,
         titles, bodies, shas, maps = [], [], [], []
         pmaps = [] if with_positions else None
         for t, h in zip(text, html):
+            # a null-typed text column arrives as NaN floats, not None
+            if not isinstance(t, str):
+                t = None
             hb = bytes(h) if h is not None else None
             title = ""
             if hb:
@@ -175,10 +178,3 @@ def term_bucket_expr(term_col: str, n_buckets: int):
     partition pruning for query-time ``term IN (...)`` scans."""
     return F.pmod(F.xxhash64(F.col(term_col)), F.lit(n_buckets)).cast("int")
 
-
-def term_bucket_lit(term: str, n_buckets: int):
-    """Bucket of a literal term as a constant-foldable expression —
-    Catalyst folds xxhash64(lit) at plan time, so `term_bucket IN (...)`
-    filters built from these reach partition pruning without any
-    driver-side job."""
-    return F.pmod(F.xxhash64(F.lit(term)), F.lit(n_buckets)).cast("int")

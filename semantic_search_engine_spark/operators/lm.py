@@ -167,7 +167,7 @@ def load_lm(store, field: str = "text", alpha: float = 0.4
     ``IndexBuilder.build_lm`` (X74's serving path — no retraining).
     ``total_tokens`` is one scalar aggregate over the unigram counts.
     The tables carry ``w_bucket``/``prev_bucket`` partition columns;
-    the phrase suggester adds constant-folded bucket filters to its
+    the phrase suggester adds driver-computed bucket filters to its
     ``IN`` lookups so the scans prune directories."""
     sfx = "" if field == "text" else f"_{field}"
     uni = store.read(f"lm_unigrams{sfx}")

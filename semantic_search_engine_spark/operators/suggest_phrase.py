@@ -36,7 +36,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..textproc import tokenize
+from ..textproc import term_bucket, tokenize
 from .fuzzy import damerau_levenshtein, delete_variants
 from .lm import StupidBackoffLM
 
@@ -90,19 +90,14 @@ def suggest_phrase(query: str, deletes: DataFrame, lm: StupidBackoffLM,
     # pruned count lookups: unigrams for every candidate, bigrams for
     # every adjacent candidate pair (superset IN-scan, tiny). When the
     # tables come from IndexBuilder.build_lm they carry term-hash
-    # partition columns — with ``n_term_buckets`` given, constant-folded
-    # bucket equality filters (the X34 pattern: Catalyst folds
-    # xxhash64(lit)) prune whole directories before the IN pushdown.
+    # partition columns — with ``n_term_buckets`` given, a bucket IN
+    # filter of driver-computed ints (``textproc.term_bucket``) prunes
+    # whole directories before the IN pushdown.
     def _bucket_pred(df: DataFrame, bcol: str, values: list[str]):
         if n_term_buckets is None or bcol not in df.columns or not values:
             return None
-        from functools import reduce
-        from operator import or_
-
-        from ..functions.udfs import term_bucket_lit
-        return reduce(or_, [
-            F.col(bcol) == term_bucket_lit(v, n_term_buckets)
-            for v in values])
+        return F.col(bcol).isin(
+            sorted({term_bucket(v, n_term_buckets) for v in values}))
 
     vocab = sorted({c for pos in lattice for c, _d, _df in pos})
     uscan = lm.unigrams

@@ -38,7 +38,7 @@ so the score is independent of WHICH clause matched.
 
 Execution is one ``applyInPandas`` pass over the term-pruned postings
 scan — same plan shape as the WAND fast path (``plans/query.py``):
-constant-folded ``term_bucket`` pruning + ``term IN`` pushdown, global
+driver-computed ``term_bucket`` pruning + ``term IN`` pushdown, global
 ``df`` riding each block row via a broadcast join, per-bucket kernel,
 <= P*k merge. Inside a bucket, conjunctions run as sorted-array
 intersections over the decoded postings (numpy C loops): the scan is

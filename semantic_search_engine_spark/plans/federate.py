@@ -28,7 +28,7 @@ can never shave the bound below a true contribution — bounds only need to
 be sound, and the looseness costs at most a handful of extra evaluations.
 
 Distribution model: one Spark job. Each index's pruned posting scan
-(constant-folded term_bucket literals + ``term IN`` pushdown, each under
+(driver-computed term_bucket literals + ``term IN`` pushdown, each under
 its OWN layout — bucket counts may differ per index) is tagged with its
 federation position and unioned; WAND runs per ``(fed_idx, partition_id)``
 group — every doc lives in exactly one group, so the union of per-group

@@ -559,3 +559,65 @@ def doc_bucket(doc_id: int, n_buckets: int) -> int:
     WAND scan and delta encoding rely on.
     """
     return int(doc_id // ((1 << 60) // n_buckets + 1))
+
+
+# XXH64 constants (Spark's ``xxhash64`` is the standard XXH64, seed 42)
+_M64 = (1 << 64) - 1
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+_XXH_SEED = 42
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes) -> int:
+    """Standard XXH64 of ``data`` (seed 42) as an unsigned 64-bit int."""
+    seed, n, i = _XXH_SEED, len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                v[j] = _xxh_round(
+                    v[j], int.from_bytes(data[i:i + 8], "little"))
+                i += 8
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _xxh_round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        lane = _xxh_round(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl(h ^ lane, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        lane = int.from_bytes(data[i:i + 4], "little") * _P1 & _M64
+        h = (_rotl(h ^ lane, 23) * _P2 + _P3) & _M64
+        i += 4
+    for byte in data[i:]:
+        h = _rotl(h ^ (byte * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def term_bucket(term: str, n_buckets: int) -> int:
+    """Hash bucket of a term in the postings layout — equals Spark's
+    ``pmod(xxhash64(term), n_buckets)`` (``functions/udfs.term_bucket_expr``,
+    which lays the table out at build time). Computed on the driver, so a
+    query-time ``term_bucket IN (...)`` filter is a list of plain ints:
+    it still reaches partition pruning, with no per-term JVM expression."""
+    h = _xxh64(term.encode("utf-8"))
+    # Spark hashes to a signed long; Python's % on it is pmod
+    return (h - (1 << 64) if h >> 63 else h) % n_buckets

@@ -65,12 +65,10 @@ def test_suggest_with_persisted_lm_and_pruning(spark, built):
 def test_bucket_pruning_reaches_partition_filters(spark, built):
     store, _ = built
     loaded = load_lm(store)
-    from semantic_search_engine_spark.functions.udfs import (
-        term_bucket_lit,
-    )
+    from semantic_search_engine_spark.textproc import term_bucket
     scan = loaded.unigrams.filter(
-        (F.col("w_bucket") == term_bucket_lit("zipfhead0",
-                                              CFG.n_term_buckets))
+        (F.col("w_bucket") == term_bucket("zipfhead0",
+                                          CFG.n_term_buckets))
         & F.col("w").isin(["zipfhead0"]))
     plan = scan._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan

@@ -200,3 +200,25 @@ def test_resume_skips_all_stages(built, spark, tiny_corpus_dir):
     docs = spark.read.parquet(f"{tiny_corpus_dir}/documents.parquet")
     runner2 = IndexBuilder(spark, store, CFG).build(docs)
     assert all(m["skipped"] for m in runner2.metrics)
+
+
+def test_build_from_null_typed_text_column(spark, tmp_path_factory,
+                                          tiny_rows):
+    """An input whose ``text`` column is all null AND typed ``null`` (not
+    ``string``) reaches the extract UDF as NaN floats, not None; such a
+    value must count as missing, so every row falls back to its html."""
+    from pyspark.sql.types import NullType
+
+    rows = tiny_rows[:40]
+    docs = (spark.createDataFrame(
+        [(r["url"], r["warc_ts"], r["html"], r["lang"]) for r in rows],
+        "url string, warc_ts timestamp, html binary, lang string")
+        .withColumn("text", F.lit(None)))
+    assert isinstance(docs.schema["text"].dataType, NullType)
+    store = HadoopTableStore(spark, str(tmp_path_factory.mktemp("wh_null")))
+    IndexBuilder(spark, store, CFG).build(docs)
+    got = {r["url"]: r["text"] for r in
+           store.read("doc_features").select("url", "text").collect()}
+    want = {r["url"]: resolve_text(None, r["html"]) for r in rows}
+    want = {u: t for u, t in want.items() if t is not None}
+    assert want and got == want

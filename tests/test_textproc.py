@@ -6,6 +6,7 @@ from semantic_search_engine_spark.textproc import (
     extract_html,
     extract_text,
     resolve_text,
+    term_bucket,
     tokenize,
 )
 
@@ -185,3 +186,30 @@ def test_tokenize_overlong_fast_path():
         assert tokenize(c) == ref(c), repr(c[:80])
         assert tokenize(c, 10, 2) == ref(c, 10, 2), repr(c[:80])
         assert tokenize(c, 100, 1) == ref(c, 100, 1), repr(c[:80])
+
+
+def test_term_bucket_equals_spark_pmod_xxhash64(spark):
+    """The driver-side term bucket must be Spark's own
+    ``pmod(xxhash64(term), n)``, or query-time partition pruning would
+    skip the bucket that holds the term. Every length 0..80 bytes covers
+    the 32-byte stripe loop and the 8-, 4- and 1-byte tails."""
+    import random
+
+    from pyspark.sql import functions as F
+
+    rng = random.Random(11)
+    ascii_alpha = "abcdefghijklmnopqrstuvwxyz0123456789"
+    terms = ["".join(rng.choice(ascii_alpha) for _ in range(n))
+             for n in range(81) for _ in range(3)]
+    # multi-byte UTF-8: 2-, 3- and 4-byte code points, mixed with ASCII
+    terms += ["é", "straße", "naïve café", "日本語テキスト", "🙂",
+              "mixed🙂テキストé" * 5, "ü" * 40]
+    ns = (1, 4, 32)
+    rows = (spark.createDataFrame([(t,) for t in terms], "t string")
+            .select("t", *[F.pmod(F.xxhash64("t"), F.lit(n)).alias(f"b{n}")
+                           for n in ns])
+            .collect())
+    assert len(rows) == len(terms)
+    for r in rows:
+        for n in ns:
+            assert term_bucket(r["t"], n) == r[f"b{n}"], (r["t"], n)

@@ -416,3 +416,81 @@ def test_batch_top_k_scales_to_hundred_queries(spark, wand_built):
     for q in [queries[0], queries[13], queries[57], queries[99]]:
         assert batch[q] == qe.top_k(q, k=5, mode="wand"), q
     assert any(batch[q] for q in queries)  # non-degenerate
+
+
+def _group_cost(spark, name, fn):
+    """Run ``fn`` under Spark job group ``name``; return its result and
+    the (jobs, tasks) the group ran, from the status tracker."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(name)
+    tasks = 0
+    for j in jobs:
+        for s in st.getJobInfo(j).stageIds:
+            # no info: a stage that ran no task here (skipped, or never
+            # submitted for zero partitions); the status store may have
+            # evicted its record already
+            info = st.getStageInfo(s)
+            tasks += info.numTasks if info is not None else 0
+    return out, len(jobs), tasks
+
+
+def test_query_job_counts(spark, wand_built):
+    """Job budget per changed serve shape (status tracker, warm engine):
+    a batch with duplicate term sets fans duplicates out inside the WAND
+    kernel (no list-built mapping frame, so no extra Python-worker job),
+    the exact count path carries idf as a map literal (no idf frame),
+    and bare top_k is unchanged."""
+    from semantic_search_engine_spark.corpus import QUERY_CORPUS
+    from semantic_search_engine_spark.plans.query import QueryEngine
+
+    store, cfg = wand_built
+    qe = QueryEngine(spark, store, cfg)
+    seed_qs = [pq.query for pq in QUERY_CORPUS]
+    # warm the per-engine caches (corpus stats, df lookups)
+    qe.batch_top_k(seed_qs[:2], k=10)
+    qe.search("zipfhead0", k=10, count_mode="exact")
+
+    # duplicates: repeated strings and a re-ordered spelling of one
+    queries = seed_qs + seed_qs[:3] + ["zipfhead1 zipfhead0",
+                                       "zipfhead0 zipfhead1"]
+    batch, jobs, _ = _group_cost(spark, "jc-batch",
+                                 lambda: qe.batch_top_k(queries, k=10))
+    assert jobs == 4
+    for q in set(queries):
+        assert batch[q] == qe.top_k(q, k=10), q
+
+    # terms this engine has not looked up yet: the df lookup is one of
+    # the jobs, as for any new query; more candidates than the page
+    # holds, so the count job runs too
+    env, jobs, _ = _group_cost(
+        spark, "jc-exact",
+        lambda: qe.search("zipfhead2 zipfhead3", k=10, count_mode="exact"))
+    assert env["total_count"] > 10
+    assert jobs == 7
+
+    _, jobs, _ = _group_cost(spark, "jc-topk",
+                             lambda: qe.top_k("zipfhead0 zipfhead1", k=10))
+    assert jobs == 3
+
+
+def test_tokenless_queries_run_no_task(spark, wand_built):
+    """A query with no tokens answers [] from a JVM-only empty frame:
+    no Python-worker job, no task."""
+    from semantic_search_engine_spark.plans.query import QueryEngine
+
+    store, cfg = wand_built
+    qe = QueryEngine(spark, store, cfg)
+    qe.top_k("zipfhead0", k=10)  # warm the corpus-stats cache
+    hits, _, tasks = _group_cost(spark, "jc-empty-topk",
+                                 lambda: qe.top_k("", k=10))
+    assert hits == [] and tasks == 0
+    env, _, tasks = _group_cost(spark, "jc-empty-search",
+                                lambda: qe.search("!!!"))
+    assert env["results"] == [] and env["total_count"] == 0
+    assert tasks == 0
