@@ -584,10 +584,10 @@ class QueryEngine:
         that actually contain hits (VERDICT r2 #2 — at 10^12 docs the
         decorate-100-rows join must not scan the whole metadata table).
 
-        A single query skips the per-query ``row_number`` window entirely
-        — its ≤ P·k local hits merge through ``orderBy().limit(k)``
-        (TakeOrderedAndProject: per-partition heap, driver merge, no
-        exchange). Every other call keeps the windowed merge.
+        A single unique term set skips the per-query ``row_number`` window
+        entirely — its ≤ P·k local hits merge through
+        ``orderBy().limit(k)`` (TakeOrderedAndProject: per-partition heap,
+        driver merge, no exchange). N>1 keeps the windowed merge.
         """
         from .wand import (
             BATCH_WAND_OUT_SCHEMA,
@@ -599,8 +599,8 @@ class QueryEngine:
         k = cfg.default_k if k is None \
             else min(k, cfg.max_k + cfg.max_offset)
         # one WAND pass per UNIQUE term set: duplicate query strings (and
-        # distinct strings that tokenize identically) share one pass, and
-        # the kernel emits its hits once per member query_id
+        # distinct strings that tokenize identically) share their first
+        # member's query_id and fan back out after the merge
         members: dict[tuple, list[int]] = {}
         for qi, q in enumerate(queries):
             ts = tuple(sorted(set(tokenize(q, cfg.max_token_len,
@@ -613,7 +613,7 @@ class QueryEngine:
         avgdl, n_docs = stats["avg_doc_len"], stats["n_docs"]
         if avgdl <= 0:
             return self._empty(BATCH_WAND_OUT_SCHEMA)
-        groups = [(qids, list(ts)) for ts, qids in members.items()]
+        query_terms = {qids[0]: list(ts) for ts, qids in members.items()}
         all_terms = sorted({t for ts in members for t in ts})
 
         blocks = self._pruned_term_scan(f"postings{self._sfx()}",
@@ -633,7 +633,7 @@ class QueryEngine:
                 self.store.read(f"doc_meta{self._sfx()}"), lang,
                 warc_ts_min, warc_ts_max, site=site,
                 neg_site=neg_site).select("partition_id", "doc_id")
-            fn = make_wand_batch_cogroup_fn(groups, k,
+            fn = make_wand_batch_cogroup_fn(query_terms, k,
                                             float(cfg.k1), float(cfg.b),
                                             avgdl, n_docs,
                                             min_score=float(min_score),
@@ -644,7 +644,7 @@ class QueryEngine:
                      .cogroup(allowed.groupBy("partition_id"))
                      .applyInPandas(fn, schema=BATCH_WAND_OUT_SCHEMA))
         else:
-            fn = make_wand_batch_group_fn(groups, k, float(cfg.k1),
+            fn = make_wand_batch_group_fn(query_terms, k, float(cfg.k1),
                                           float(cfg.b), avgdl, n_docs,
                                           min_score=float(min_score),
                                           after=after,
@@ -652,19 +652,29 @@ class QueryEngine:
                                           min_match=int(min_match))
             local = blocks.groupBy("partition_id").applyInPandas(
                 fn, schema=BATCH_WAND_OUT_SCHEMA)
-        if sum(len(qids) for qids, _ in groups) == 1:
-            # ONE query (the single-query serve path): global top-k over
-            # its ≤ P·k local hits — no row_number window, no extra
-            # exchange
-            return (local.orderBy(F.desc("score"), F.asc("doc_id"))
-                    .limit(k)
-                    .select("query_id", "partition_id", "doc_id", "score"))
-        from pyspark.sql.window import Window
-        w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                                   F.asc("doc_id"))
-        return (local.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") <= k)
-                .select("query_id", "partition_id", "doc_id", "score"))
+        if len(query_terms) == 1:
+            # ONE unique term set (the single-query serve path, plus any
+            # duplicate batch): global top-k over its ≤ P·k local hits —
+            # no row_number window, no extra exchange
+            ranked = (local.orderBy(F.desc("score"), F.asc("doc_id"))
+                      .limit(k))
+        else:
+            from pyspark.sql.window import Window
+            w = Window.partitionBy("query_id").orderBy(F.desc("score"),
+                                                       F.asc("doc_id"))
+            ranked = (local.withColumn("_rn", F.row_number().over(w))
+                      .filter(F.col("_rn") <= k))
+        fan = {qids[0]: qids for qids in members.values() if len(qids) > 1}
+        if fan:
+            # duplicates existed: replicate each representative's top-k to
+            # every member query_id through a map literal (one JVM-parsed
+            # expression; no list-built frame, no Python-worker job)
+            lit = ", ".join(f"{r}, array({', '.join(map(str, qids))})"
+                            for r, qids in fan.items())
+            ranked = ranked.withColumn("query_id", F.explode(F.coalesce(
+                F.expr(f"map({lit})")[F.col("query_id")],
+                F.array("query_id"))))
+        return ranked.select("query_id", "partition_id", "doc_id", "score")
 
     # ------------------------------------------------- phrase / proximity
     _PHRASE_EMPTY = ("partition_id int, doc_id long, score double, "
@@ -3041,6 +3051,12 @@ class QueryEngine:
             return self._envelope(rows, len(rows), k, query, t0,
                                   highlight, offset=offset)
 
+        if not tokenize(query, cfg.max_token_len, cfg.min_token_len,
+                        cfg.analyzer):
+            # nothing to score: answer without planning any Spark job
+            return self._envelope([], 0, k, query, t0, highlight,
+                                  offset=offset)
+
         if mode == "wand" and count_mode in ("none", "approx"):
             # fast path: filtered block-max WAND; totalCount = page size
             # (the reference's own title-path shortcut,
@@ -3071,20 +3087,14 @@ class QueryEngine:
 
         out = out.cache()
         try:
-            page = (out.orderBy(F.desc("score"), F.asc("doc_id"))
-                    .limit(k + offset).collect())
-            rows = page[offset:]
+            rows = (out.orderBy(F.desc("score"), F.asc("doc_id"))
+                    .limit(k + offset).collect())[offset:]
             # the exhaustive plan has already scored every candidate (and
             # cached them), so the exact pre-limit count is one cheap
             # cached count — "approx" is honored with the exact value
-            # rather than silently degrading to the page size. A page
-            # that did not fill holds every candidate: it is the count.
-            if count_mode not in ("exact", "approx"):
-                total = len(rows)
-            elif len(page) < k + offset:
-                total = len(page)
-            else:
-                total = out.count()
+            # rather than silently degrading to the page size
+            total = (out.count() if count_mode in ("exact", "approx")
+                     else len(rows))
         finally:
             out.unpersist()
         return self._envelope(rows, total, k, query, t0, highlight,

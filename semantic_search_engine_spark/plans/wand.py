@@ -353,7 +353,7 @@ BATCH_WAND_OUT_SCHEMA = ("query_id int, partition_id int, doc_id long, "
                          "score double")
 
 
-def make_wand_batch_group_fn(groups: list[tuple[list[int], list[str]]],
+def make_wand_batch_group_fn(query_terms: dict[int, list[str]],
                              k: int, k1: float, b: float, avgdl: float,
                              n_docs: int, min_score: float = 0.0,
                              after: "tuple[float, int] | None" = None,
@@ -361,10 +361,6 @@ def make_wand_batch_group_fn(groups: list[tuple[list[int], list[str]]],
                              min_match: int = 1):
     """``applyInPandas`` body for MULTI-QUERY WAND: one doc bucket's blocks
     (the union of every query's term postings) → per-query local top-k.
-
-    ``groups``: one ``(query_ids, terms)`` entry per unique term set. WAND
-    runs once per entry and its hits are emitted once per member
-    query_id, so duplicate queries cost one pass and no join afterwards.
 
     Amortizes the per-job scheduling floor across N queries: the postings
     scan, the shuffle to bucket groups, and the group task launch are paid
@@ -385,22 +381,21 @@ def make_wand_batch_group_fn(groups: list[tuple[list[int], list[str]]],
     """
 
     def run_bucket(pdf):
-        return _run_bucket_batch(pdf, None, groups, k, k1, b, avgdl,
+        return _run_bucket_batch(pdf, None, query_terms, k, k1, b, avgdl,
                                  n_docs, min_score, after, term_boosts,
                                  min_match)
 
     return run_bucket
 
 
-def _run_bucket_batch(pdf, allowed, groups, k, k1, b, avgdl, n_docs,
+def _run_bucket_batch(pdf, allowed, query_terms, k, k1, b, avgdl, n_docs,
                       min_score=0.0, after=None, term_boosts=None,
                       min_match=1):
     """Shared body for the batch group/cogroup forms: one bucket's blocks
-    (+ optional sorted allowed-doc array) → per-query local top-k, each
-    term set's hits repeated for every query_id in its group."""
+    (+ optional sorted allowed-doc array) → per-query local top-k."""
     import pandas as pd
 
-    out_qids: list[int] = []
+    qids: list[int] = []
     pids: list[int] = []
     docs: list[int] = []
     scores: list[float] = []
@@ -415,7 +410,7 @@ def _run_bucket_batch(pdf, allowed, groups, k, k1, b, avgdl, n_docs,
         idf = {t: bm25_idf(n_docs, int(d))
                for t, d in zip(uniq["term"], uniq["df"])}
         pid = int(pdf["partition_id"].iloc[0])
-        for qids, terms in groups:
+        for qid, terms in query_terms.items():
             # per-term boost multipliers (PRF expansion down-weighting,
             # user `term^boost` weighting): weight = boost * idf, the
             # float-op order the oracle replays. Boosts only scale each
@@ -431,21 +426,20 @@ def _run_bucket_batch(pdf, allowed, groups, k, k1, b, avgdl, n_docs,
             hits, _ = wand_top_k(sub, weights, k, k1, b, avgdl,
                                  allowed=allowed, min_score=min_score,
                                  after=after, min_match=min_match)
-            for qid in qids:
-                for d, s in hits:
-                    out_qids.append(qid)
-                    pids.append(pid)
-                    docs.append(d)
-                    scores.append(s)
+            for d, s in hits:
+                qids.append(qid)
+                pids.append(pid)
+                docs.append(d)
+                scores.append(s)
     return pd.DataFrame({
-        "query_id": pd.Series(out_qids, dtype="int32"),
+        "query_id": pd.Series(qids, dtype="int32"),
         "partition_id": pd.Series(pids, dtype="int32"),
         "doc_id": pd.Series(docs, dtype="int64"),
         "score": pd.Series(scores, dtype="float64"),
     })
 
 
-def make_wand_batch_cogroup_fn(groups: list[tuple[list[int], list[str]]],
+def make_wand_batch_cogroup_fn(query_terms: dict[int, list[str]],
                                k: int, k1: float, b: float, avgdl: float,
                                n_docs: int, min_score: float = 0.0,
                                after: "tuple[float, int] | None" = None,
@@ -459,11 +453,11 @@ def make_wand_batch_cogroup_fn(groups: list[tuple[list[int], list[str]]],
     def run_bucket(blocks_pdf, allowed_pdf):
         if len(allowed_pdf) == 0:
             return _run_bucket_batch(blocks_pdf.iloc[:0], None,
-                                     groups, k, k1, b, avgdl, n_docs,
+                                     query_terms, k, k1, b, avgdl, n_docs,
                                      min_score, after, term_boosts,
                                      min_match)
         allowed = np.sort(allowed_pdf["doc_id"].to_numpy(dtype=np.int64))
-        return _run_bucket_batch(blocks_pdf, allowed, groups,
+        return _run_bucket_batch(blocks_pdf, allowed, query_terms,
                                  k, k1, b, avgdl, n_docs, min_score, after,
                                  term_boosts, min_match)
 

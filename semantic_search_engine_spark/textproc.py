@@ -561,55 +561,68 @@ def doc_bucket(doc_id: int, n_buckets: int) -> int:
     return int(doc_id // ((1 << 60) // n_buckets + 1))
 
 
-# XXH64 constants (Spark's ``xxhash64`` is the standard XXH64, seed 42)
+# Pure-Python XXH64 (Collet's public xxHash spec, github.com/Cyan4973/
+# xxHash/blob/dev/doc/xxhash_spec.md) — a pure-Python mirror of Spark's
+# ``xxhash64`` expression (seed 42, UTF-8 bytes of the string input,
+# result as a SIGNED 64-bit long). Used by the near-dedup oracle to
+# reproduce the engine's MinHash signatures independently, and by
+# ``term_bucket`` to bucket query terms on the driver.
+_XP1 = 0x9E3779B185EBCA87
+_XP2 = 0xC2B2AE3D27D4EB4F
+_XP3 = 0x165667B19E3779F9
+_XP4 = 0x85EBCA77C2B2AE63
+_XP5 = 0x27D4EB2F165667C5
 _M64 = (1 << 64) - 1
-_P1 = 0x9E3779B185EBCA87
-_P2 = 0xC2B2AE3D27D4EB4F
-_P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
-_P5 = 0x27D4EB2F165667C5
-_XXH_SEED = 42
 
 
 def _rotl(x: int, r: int) -> int:
     return ((x << r) | (x >> (64 - r))) & _M64
 
 
-def _xxh_round(acc: int, lane: int) -> int:
-    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+def _xxround(acc: int, inp: int) -> int:
+    return (_rotl((acc + inp * _XP2) & _M64, 31) * _XP1) & _M64
 
 
-def _xxh64(data: bytes) -> int:
-    """Standard XXH64 of ``data`` (seed 42) as an unsigned 64-bit int."""
-    seed, n, i = _XXH_SEED, len(data), 0
+def xxhash64(data: bytes, seed: int = 42) -> int:
+    """XXH64(data, seed) as a SIGNED 64-bit integer (Spark semantics)."""
+    n, i = len(data), 0
     if n >= 32:
-        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
-             (seed - _P1) & _M64]
-        while i + 32 <= n:
-            for j in range(4):
-                v[j] = _xxh_round(
-                    v[j], int.from_bytes(data[i:i + 8], "little"))
-                i += 8
-        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
-             + _rotl(v[3], 18)) & _M64
-        for x in v:
-            h = ((h ^ _xxh_round(0, x)) * _P1 + _P4) & _M64
+        v1 = (seed + _XP1 + _XP2) & _M64
+        v2 = (seed + _XP2) & _M64
+        v3 = seed & _M64
+        v4 = (seed - _XP1) & _M64
+        while i <= n - 32:
+            v1 = _xxround(v1, int.from_bytes(data[i:i + 8], "little"))
+            v2 = _xxround(v2, int.from_bytes(data[i + 8:i + 16], "little"))
+            v3 = _xxround(v3, int.from_bytes(data[i + 16:i + 24], "little"))
+            v4 = _xxround(v4, int.from_bytes(data[i + 24:i + 32], "little"))
+            i += 32
+        h = (_rotl(v1, 1) + _rotl(v2, 7) + _rotl(v3, 12)
+             + _rotl(v4, 18)) & _M64
+        for v in (v1, v2, v3, v4):
+            h ^= _xxround(0, v)
+            h = (h * _XP1 + _XP4) & _M64
     else:
-        h = (seed + _P5) & _M64
+        h = (seed + _XP5) & _M64
     h = (h + n) & _M64
     while i + 8 <= n:
-        lane = _xxh_round(0, int.from_bytes(data[i:i + 8], "little"))
-        h = (_rotl(h ^ lane, 27) * _P1 + _P4) & _M64
+        h ^= _xxround(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl(h, 27) * _XP1 + _XP4) & _M64
         i += 8
     if i + 4 <= n:
-        lane = int.from_bytes(data[i:i + 4], "little") * _P1 & _M64
-        h = (_rotl(h ^ lane, 23) * _P2 + _P3) & _M64
+        h ^= (int.from_bytes(data[i:i + 4], "little") * _XP1) & _M64
+        h = (_rotl(h, 23) * _XP2 + _XP3) & _M64
         i += 4
-    for byte in data[i:]:
-        h = _rotl(h ^ (byte * _P5 & _M64), 11) * _P1 & _M64
-    h = (h ^ (h >> 33)) * _P2 & _M64
-    h = (h ^ (h >> 29)) * _P3 & _M64
-    return h ^ (h >> 32)
+    while i < n:
+        h ^= (data[i] * _XP5) & _M64
+        h = (_rotl(h, 11) * _XP1) & _M64
+        i += 1
+    h ^= h >> 33
+    h = (h * _XP2) & _M64
+    h ^= h >> 29
+    h = (h * _XP3) & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >= (1 << 63) else h
 
 
 def term_bucket(term: str, n_buckets: int) -> int:
@@ -618,6 +631,5 @@ def term_bucket(term: str, n_buckets: int) -> int:
     which lays the table out at build time). Computed on the driver, so a
     query-time ``term_bucket IN (...)`` filter is a list of plain ints:
     it still reaches partition pruning, with no per-term JVM expression."""
-    h = _xxh64(term.encode("utf-8"))
-    # Spark hashes to a signed long; Python's % on it is pmod
-    return (h - (1 << 64) if h >> 63 else h) % n_buckets
+    # xxhash64 is signed like Spark's long; Python's % on it is pmod
+    return xxhash64(term.encode("utf-8")) % n_buckets

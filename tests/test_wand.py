@@ -442,8 +442,8 @@ def _group_cost(spark, name, fn):
 
 def test_query_job_counts(spark, wand_built):
     """Job budget per changed serve shape (status tracker, warm engine):
-    a batch with duplicate term sets fans duplicates out inside the WAND
-    kernel (no list-built mapping frame, so no extra Python-worker job),
+    a batch with duplicate term sets fans duplicates out through a map
+    literal (no list-built mapping frame, so no extra Python-worker job),
     the exact count path carries idf as a map literal (no idf frame),
     and bare top_k is unchanged."""
     from semantic_search_engine_spark.corpus import QUERY_CORPUS
@@ -466,8 +466,7 @@ def test_query_job_counts(spark, wand_built):
         assert batch[q] == qe.top_k(q, k=10), q
 
     # terms this engine has not looked up yet: the df lookup is one of
-    # the jobs, as for any new query; more candidates than the page
-    # holds, so the count job runs too
+    # the jobs, as for any new query
     env, jobs, _ = _group_cost(
         spark, "jc-exact",
         lambda: qe.search("zipfhead2 zipfhead3", k=10, count_mode="exact"))
